@@ -39,10 +39,12 @@ object AggPushdown {
   final case class Pushed(schema: StructType, rows: Array[InternalRow],
       funcs: String)
 
-  def tryPush(table: GraftTable, plan: ScanPlan, agg: Aggregation): Option[Pushed] = {
+  /** `schema` is the scan's schema (a time-travel read resolves column
+    * names against its snapshot's schema, not the current one). */
+  def tryPush(table: GraftTable, plan: ScanPlan, agg: Aggregation,
+      schema: StructType): Option[Pushed] = {
     if (plan.deleteFiles.nonEmpty) return None
     val m = table.metadata
-    val schema = m.schema
     val nameToId = FieldIds.nameToId(schema)
 
     def colOf(e: XExpr): Option[(Int, StructField)] = e match {

@@ -44,8 +44,7 @@ final class GraftSparkTable(spark: SparkSession, val table: GraftTable,
     * position and raise). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(GraftSparkTable.FileMetadataColumn, GraftSparkTable.PosMetadataColumn,
-      GraftSparkTable.RowIdMetadataColumn, GraftSparkTable.LastUpdatedMetadataColumn)
+    GraftSparkTable.MetadataColumns
 
   /** SQL `DELETE FROM t WHERE p` (reference spark3 SparkTable implements
     * SupportsDelete with metadata-only deletes). Ours goes further:
@@ -275,6 +274,11 @@ object GraftSparkTable {
       "sequence number of the commit that last wrote the row (v3 row lineage)"
   }
 
+  /** Every metadata column a graft relation serves. */
+  def MetadataColumns: Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(FileMetadataColumn, PosMetadataColumn, RowIdMetadataColumn,
+      LastUpdatedMetadataColumn)
+
   /** The table's partition spec as Spark connector transforms (shared by
     * Table.partitioning() and the write's required distribution). */
   def partitionTransforms(m: TableMetadata): Array[XTransform] = {
@@ -302,17 +306,32 @@ object GraftSparkTable {
   * surviving file is produced, because ReplaceData rewrites whole groups
   * and a row-filtered read would drop the unmatched rows it must carry
   * over. `onPlan` hands the planned file set to the operation so its
-  * commit can replace exactly what was read. */
+  * commit can replace exactly what was read.
+  *
+  * `explicit` (library reads — TableScan.toDF / lineageDF / dfFor) seeds
+  * the plan memo: the scan reads exactly that file and delete-file set,
+  * under the schema the caller resolved when the plan was made, so a
+  * schema commit landing before the read executes cannot re-map its
+  * columns. Pushed filters then reach only the file readers and the
+  * residual; they never re-plan, narrow equality deletes or cut the plan
+  * at a LIMIT.
+  */
 final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     base: TableScan, options: CaseInsensitiveStringMap,
     groupGranular: Boolean = false,
     onPlan: ScanPlan => Unit = _ => (),
-    onRuntimeFilter: Set[String] => Unit = _ => ())
+    onRuntimeFilter: Set[String] => Unit = _ => (),
+    explicit: Option[GraftScanBuilder.ExplicitRead] = None)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
   with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
+  import GraftScanBuilder.GroupReader
 
   private var pushed: Array[Filter] = Array.empty
+  // one schema per builder: filter binding, aggregate pushdown and the read
+  // layout must agree even when a schema commit lands mid-planning
+  private lazy val scanSchema: StructType =
+    explicit.fold(base.scanSchema)(_.schema)
   private var requiredSchema: Option[StructType] = None
   private var pushedAgg: Option[AggPushdown.Pushed] = None
 
@@ -335,7 +354,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
       case _ =>
         val res =
           if (groupGranular || pushed.nonEmpty) None
-          else AggPushdown.tryPush(table, planBase(), agg)
+          else AggPushdown.tryPush(table, planBase(), agg, scanSchema)
         aggAttempt = Some((agg, res))
         res
     }
@@ -343,7 +362,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
   // one manifest walk per builder for the UNFILTERED plan: a refused agg
   // pushdown (tryAgg) and the fallback buildFileScan would otherwise each
   // pay a full planFiles() on the same scan
-  private var basePlan: Option[graft.format.ScanPlan] = None
+  private var basePlan: Option[graft.format.ScanPlan] = explicit.map(_.plan)
   private def planBase(): graft.format.ScanPlan = basePlan match {
     case Some(p) => p
     case None =>
@@ -372,7 +391,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     * live (a file's surviving count is unknown) — detected at build time
     * since the plan doesn't exist yet. */
   override def pushLimit(n: Int): Boolean =
-    if (groupGranular) false
+    if (groupGranular || explicit.isDefined) false
     else { pushedLimit = Some(n); true }
 
   override def isPartiallyPushed(): Boolean = true
@@ -384,7 +403,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     // planning instead of staying Spark-side (nested stats aren't
     // recorded anyway, so refusing loses no pruning)
     pushed = filters.filter(f => FilterBridge.convert(f).exists(e =>
-      scala.util.Try(Exprs.bind(e, base.scanSchema)).isSuccess))
+      scala.util.Try(Exprs.bind(e, scanSchema)).isSuccess))
     // return ALL filters as post-scan: Spark re-applies them — residual
     // safety exactly as the reference (SparkScanBuilder.java:121-123).
     // (In group-granular mode Spark ignores the residual: the ReplaceData
@@ -408,24 +427,44 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     case None => buildFileScan()
   }
 
+  /** Plan → reader groups → one union scan. */
   private def buildFileScan(): Scan = {
+    val plan = planScan()
+    val layout = new ReadLayout(plan, scanSchema)
+    val groups = groupTasks(layout).map { case (key, tasks) =>
+      groupReader(layout, key, tasks) }
+    new GraftScan(layout.output, groups.map(_.scan), plan, spark, table, options,
+      groups.map(_.deletes), runtimeFileFiltering = groupGranular,
+      onRuntimeFilter = onRuntimeFilter, spjInfo = spjInfo(layout),
+      ndvStats = base.snapshot.map(_.snapshotId)
+        .flatMap(id => Stats.read(table, id)),
+      fills = groups.map(_.fills),
+      lineages = groups.map(_.lineage))
+  }
+
+  /** The files this scan reads: the base plan narrowed by the pushed
+    * filters (an explicit plan is read as given), equality-delete entries
+    * pruned by the same filters, and a bare LIMIT's file cut. */
+  private def planScan(): ScanPlan = {
     val expr = FilterBridge.convertAll(pushed)
     val scan = if (expr == AlwaysTrue) base else base.filter(expr)
-    val schema = scan.scanSchema
-    val planned0 = if (expr == AlwaysTrue) planBase() else scan.planFiles()
+    val planned0 =
+      if (expr == AlwaysTrue || explicit.isDefined) planBase()
+      else scan.planFiles()
     // equality-delete entries prune through the SAME metrics evaluator as
     // data files, over their KEY-column stats (recorded at stage time): a
     // key matching a row that survives the filter agrees with it on every
     // key column, so a filter no key can satisfy proves the delete set
     // irrelevant to the RESULT. Sound ONLY here: this scan re-applies the
     // whole filter as a residual (a resurrected row failing it is
-    // discarded above); group-granular row-level ops and the library's
-    // whole-file readers (deleteWhere CoW) must keep every entry.
+    // discarded above); group-granular row-level ops and explicit plans
+    // (whole-file readers such as deleteWhere's copy-on-write rewrite)
+    // must keep every entry.
     val planned =
-      if (expr == AlwaysTrue || groupGranular ||
+      if (expr == AlwaysTrue || groupGranular || explicit.isDefined ||
           planned0.deleteFiles.isEmpty) planned0
       else {
-        val bound = Exprs.bind(expr, schema)
+        val bound = Exprs.bind(expr, scanSchema)
         planned0.copy(deleteFiles = planned0.deleteFiles.filter(d =>
           d._1.content != FileContent.EqualityDeletes ||
             Evaluators.inclusiveMetrics(bound, d._1)))
@@ -441,56 +480,75 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
       case _ => planned
     }
     onPlan(plan)
-    def strip(st: StructType) = Types.cleanType(st).asInstanceOf[StructType]
-    val clean = strip(schema)
-    val requested = requiredSchema.getOrElse(clean)
-    // `_file` metadata column: requested only via SupportsMetadataColumns
-    // (never part of the data schema unless shadowed by a real column);
-    // served below as a per-file partition constant, so it costs nothing
-    // when absent and no data-file I/O when present
-    val metaFile = requested.fieldNames.contains(GraftSparkTable.FileColumn) &&
-      !clean.fieldNames.contains(GraftSparkTable.FileColumn)
-    // `_pos`: the row's position in its file — parquet rides the readers'
-    // row-index column, ORC groups take the row-path counter scan
-    val metaPos = requested.fieldNames.contains(GraftSparkTable.PosColumn) &&
-      !clean.fieldNames.contains(GraftSparkTable.PosColumn)
-    // `_row_id` / `_last_updated_sequence_number`: v3 row lineage — served
-    // by a projection wrapper (LineageRowReader) from the file's manifest
-    // base + row index, or from the physical columns on compacted files
-    val metaRowId = requested.fieldNames.contains(Lineage.RowIdColumn) &&
-      !clean.fieldNames.contains(Lineage.RowIdColumn)
-    val metaLuseq = requested.fieldNames.contains(Lineage.LastUpdatedColumn) &&
-      !clean.fieldNames.contains(Lineage.LastUpdatedColumn)
-    val metaLineage = metaRowId || metaLuseq
-    val read0 = if (!metaFile && !metaPos && !metaLineage) requested
-      else StructType(requested.fields.filterNot(f =>
-        f.name == GraftSparkTable.FileColumn ||
-        f.name == GraftSparkTable.PosColumn ||
-        f.name == Lineage.RowIdColumn ||
-        f.name == Lineage.LastUpdatedColumn))
-    // structs carrying NESTED initial defaults read UN-pruned: a scan that
-    // requests only the absent (defaulted) child gets a null struct from
-    // the file source — parent null-ness would be unobservable, and the
-    // backfill could not distinguish "parent null" from "child missing"
-    def hasNestedDefault(dt: DataType): Boolean = dt match {
-      case s: StructType => s.fields.exists(f =>
-        f.metadata.contains(Defaults.Key) || hasNestedDefault(f.dataType))
-      case _ => false
+    plan
+  }
+
+  private def strip(st: StructType): StructType =
+    Types.cleanType(st).asInstanceOf[StructType]
+
+  // structs carrying NESTED initial defaults read UN-pruned: a scan that
+  // requests only the absent (defaulted) child gets a null struct from
+  // the file source — parent null-ness would be unobservable, and the
+  // backfill could not distinguish "parent null" from "child missing"
+  private def hasNestedDefault(dt: DataType): Boolean = dt match {
+    case s: StructType => s.fields.exists(f =>
+      f.metadata.contains(Defaults.Key) || hasNestedDefault(f.dataType))
+    case _ => false
+  }
+  // ids of the defaulted descendant struct fields under a target type
+  private def defaultedIds(dt: DataType): Seq[Int] = dt match {
+    case s: StructType => s.fields.toSeq.flatMap { f =>
+      (if (f.metadata.contains(Defaults.Key) &&
+           f.metadata.contains(FieldIds.Key)) Seq(FieldIds.idOf(f)) else Nil) ++
+        defaultedIds(f.dataType)
     }
-    // ids of the defaulted descendant struct fields under a target type
-    def defaultedIds(dt: DataType): Seq[Int] = dt match {
-      case s: StructType => s.fields.toSeq.flatMap { f =>
-        (if (f.metadata.contains(Defaults.Key) &&
-             f.metadata.contains(FieldIds.Key)) Seq(FieldIds.idOf(f)) else Nil) ++
-          defaultedIds(f.dataType)
-      }
-      case _ => Nil
+    case _ => Nil
+  }
+
+  // re-attach field ids to a (possibly nested-pruned) clean type by name
+  // against the id-bearing scan schema, so nested id resolution works on
+  // Spark's pruned read schema too
+  private def resolveIds(pruned: DataType, full: DataType): DataType =
+    (pruned, full) match {
+      case (ps: StructType, fs: StructType) =>
+        StructType(ps.fields.map { pf =>
+          fs.fields.find(_.name == pf.name) match {
+            case Some(ff) => ff.copy(dataType = resolveIds(pf.dataType, ff.dataType))
+            case None => pf
+          }
+        })
+      case _ => pruned
     }
-    val m = table.metadata
-    val usedSchemas = plan.tasks.map(_.file.schemaId).distinct
+
+  /** Scan-wide read layout shared by every reader group: the requested
+    * columns, the metadata columns served, the live delete sets, and the
+    * identity-partition columns served as per-file constants. */
+  private final class ReadLayout(val plan: ScanPlan, val schema: StructType) {
+    val m: TableMetadata = table.metadata
+    val clean: StructType = strip(schema)
+    private val requested = requiredSchema.getOrElse(clean)
+    // metadata columns requested via SupportsMetadataColumns (a real column
+    // of the same name shadows one). `_file` is served below as a per-file
+    // partition constant, so it costs nothing when absent and no data-file
+    // I/O when present; `_pos`, the row's position in its file, rides the
+    // parquet readers' row-index column (ORC groups take the row-path
+    // counter scan); `_row_id` / `_last_updated_sequence_number` (v3 row
+    // lineage) come from a projection wrapper (LineageRowReader) over the
+    // file's manifest base + row index, or from the physical columns on
+    // compacted files
+    private val served: Set[String] = Set(GraftSparkTable.FileColumn,
+      GraftSparkTable.PosColumn, Lineage.RowIdColumn, Lineage.LastUpdatedColumn)
+      .filter(n => requested.fieldNames.contains(n) && !clean.fieldNames.contains(n))
+    val metaFile: Boolean = served(GraftSparkTable.FileColumn)
+    val metaPos: Boolean = served(GraftSparkTable.PosColumn)
+    val metaRowId: Boolean = served(Lineage.RowIdColumn)
+    val metaLuseq: Boolean = served(Lineage.LastUpdatedColumn)
+    val metaLineage: Boolean = metaRowId || metaLuseq
+    private val read0 = StructType(requested.fields.filterNot(f => served(f.name)))
+    private val usedSchemas: Seq[StructType] = plan.tasks.map(_.file.schemaId).distinct
       .map(id => m.schemas.getOrElse(id, schema))
-    lazy val usedFileIds: Seq[Set[Int]] = usedSchemas.map(FieldIds.allIds)
-    val read = StructType(read0.fields.map { f =>
+    private lazy val usedFileIds: Seq[Set[Int]] = usedSchemas.map(FieldIds.allIds)
+    val read: StructType = StructType(read0.fields.map { f =>
       FieldIds.nameToId(schema).get(f.name)
         .flatMap(FieldIds.findById(schema, _)) match {
         // un-prune only when a PLANNED file generation actually misses a
@@ -504,22 +562,6 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
       }
     })
 
-    // re-attach field ids to a (possibly nested-pruned) clean type by name
-    // against the id-bearing scan schema, so nested id resolution works on
-    // Spark's pruned read schema too
-    def resolveIds(pruned: org.apache.spark.sql.types.DataType,
-        full: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
-      (pruned, full) match {
-        case (ps: StructType, fs: StructType) =>
-          StructType(ps.fields.map { pf =>
-            fs.fields.find(_.name == pf.name) match {
-              case Some(ff) => ff.copy(dataType = resolveIds(pf.dataType, ff.dataType))
-              case None => pf
-            }
-          })
-        case _ => pruned
-      }
-
     // position deletes: like equality deletes, only the delete-file PATHS
     // travel in the plan; executors load (file → sorted positions) once per
     // delete set. Data rows get their file row index from Spark's parquet
@@ -529,13 +571,13 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     // PositionStreamDeleteFilter, core/.../deletes/Deletes.java:70-123).
     // No sequence gating is needed: a position delete names its data file
     // by path, and paths are never reused.
-    val posFiles: Seq[DataFile] =
+    private val posFiles: Seq[DataFile] =
       plan.deleteFiles.filter(_._1.content == FileContent.PositionDeletes).map(_._1)
     val posPaths: Seq[String] = posFiles
       .filterNot(_.fileFormat == FileFormats.Puffin).map(_.path).distinct.sorted
     // deletion vectors (v3): blob addresses come straight from the manifest
     val posDvs: Seq[DvSlice] = Dvs.slicesOf(posFiles)
-    val posActive = posPaths.nonEmpty || posDvs.nonEmpty
+    val posActive: Boolean = posPaths.nonEmpty || posDvs.nonEmpty
 
     // equality deletes: only the delete-file PATHS travel in the plan; each
     // executor loads (and caches) the key sets itself, so a 100M-key
@@ -564,11 +606,16 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     // names): served as Spark PARTITION values for EVERY group — constant
     // column vectors appended by Spark's own readers, the reference's
     // PartitionUtil.constantsMap — so all generations share one layout.
-    val identPartName: Map[String, String] = // target col name → tuple key
+    // Equality-delete keys on such a column are served the same way, so
+    // the delete filter probes the constant.
+    private val identPartName: Map[String, String] = // target col name → tuple key
       m.specs.values.flatMap(_.fields.filter(_.transform == Transforms.IdentityT))
         .flatMap(pf => FieldIds.findById(schema, pf.sourceId).map(_.name -> pf.name))
         .toMap
-    val partServe: Seq[StructField] = read.fields.toSeq.filter { f =>
+    private val eqKeyFields: Seq[StructField] =
+      eqDeletes.flatMap(_.names).distinct.filterNot(read.fieldNames.contains)
+        .map(n => clean.fields.find(_.name == n).get)
+    val partServe: Seq[StructField] = (read.fields.toSeq ++ eqKeyFields).filter { f =>
       identPartName.contains(f.name) && {
         val id = FieldIds.nameToId(schema).get(f.name)
         id.exists(i => usedSchemas.exists(
@@ -576,19 +623,19 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
       }
     }
     // initial defaults present on any requested column, top-level OR
-    // struct-nested? (fills are per-group below; this only gates the rare
-    // partition-served combo, where fill ordinals over wideTarget would
-    // misalign with the physical row that excludes partServe columns)
-    val anyDefaults = read.fields.exists(f =>
+    // struct-nested, beside partition-served columns: the fills index the
+    // physical row (partition-served columns excluded), so the combination
+    // reads correctly; library reads take it, catalog reads still refuse it
+    // (lifting that refusal is an open ROADMAP item)
+    private val anyDefaults = read.fields.exists(f =>
       FieldIds.findById(schema, FieldIds.nameToId(schema).getOrElse(f.name, -1))
         .exists(tf => Defaults.of(tf).isDefined || hasNestedDefault(tf.dataType)))
-    if (partServe.nonEmpty && (eqDeletes.nonEmpty || posActive || anyDefaults))
+    if (partServe.nonEmpty && anyDefaults && explicit.isEmpty)
       throw new UnsupportedOperationException(
-        "row-level deletes and initial defaults are not supported on tables " +
-        "whose identity-partition columns are metadata-only (imported hive " +
-        "layouts); rewrite the files first")
-    val partServeNames = partServe.map(_.name).toSet
-    val partSchema = StructType(partServe.map(f =>
+        "initial defaults are not supported on tables whose identity-partition " +
+        "columns are metadata-only (imported hive layouts); rewrite the files first")
+    val partServeNames: Set[String] = partServe.map(_.name).toSet
+    val partSchema: StructType = StructType(partServe.map(f =>
       StructField(f.name, Types.cleanType(f.dataType), nullable = true)) ++
       (if (metaFile)
         Seq(StructField(GraftSparkTable.FileColumn, StringType, nullable = false))
@@ -605,326 +652,11 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     lazy val posTargetPaths: Set[String] =
       Deletes.posDeleteTargetFiles(posFiles, spark.sessionState.newHadoopConf())
 
-    // one file-source scan per (writer-schema generation, file format):
-    // columns are re-mapped to each generation's *file* names by field id
-    // (id-based resolution, the heart of metadata-only rename — SURVEY
-    // §1.2), and the readDataSchema keeps the TARGET column order so every
-    // generation produces identical InternalRow/ColumnarBatch layouts.
-    // Parquet and ORC groups are Spark's own vectorized FileScans; Avro
-    // groups are the custom GraftAvroScan. With live equality deletes,
-    // tasks also split by sequence number (seqKey) so delete recency is
-    // resolvable.
-    val groups = plan.tasks
-      .groupBy(t => (t.file.schemaId,
-        if (eqDeletes.isEmpty) 0L else t.sequenceNumber, t.file.fileFormat,
-        // lineage splits groups by read strategy: computed files take the
-        // row-index path with a per-file base, compacted (materialized)
-        // files read their stored columns, pre-v3 files read NULL
-        if (!metaLineage) 0
-        else Lineage.modeOf(t.file, t.sequenceNumber) match {
-          case _: Lineage.Computed => 1
-          case Lineage.Stored => 2
-          case Lineage.Absent => 0
-        }))
-      .toSeq.sortBy(_._1).map { case ((schemaId, seqKey, fmt, lineageKind), tasks) =>
-        val lineageComputed = metaLineage && lineageKind == 1
-        val lineageStored = metaLineage && lineageKind == 2
-        // parquet: every group rides the (cheap, vectorized) row-index
-        // column while deletes are live; ORC and Avro: only TARGETED
-        // groups pay the unsplit row-path counter fallback
-        val groupPos = posActive && (fmt match {
-          case FileFormats.Parquet => true
-          case _ => tasks.exists(t =>
-            posTargetPaths.contains(ParquetIO.canonPath(t.file.path)))
-        })
-        val orcPos = groupPos && fmt == FileFormats.Orc
-        // `_pos` rides the same row-index machinery position deletes use:
-        // parquet appends the synthetic reader column; ORC groups take the
-        // row-path counter scan; Avro groups go unsplit with a counter
-        val needRowIdx = groupPos || metaPos || lineageComputed
-        val orcRowBase = fmt == FileFormats.Orc && (orcPos || metaPos || lineageComputed)
-        val avroIdx = fmt == FileFormats.Avro && needRowIdx
-        val fileSchema = m.schemas.getOrElse(schemaId, schema)
-        val fileById = FieldIds.idToName(fileSchema)
-        def fileName(target: StructField): String =
-          FieldIds.findById(schema, FieldIds.nameToId(schema)(target.name))
-            .map(FieldIds.idOf) match {
-            case Some(id) => fileById.getOrElse(id, {
-              // the field id is ABSENT from this generation, so the column
-              // must read NULL — but the generation may still carry a
-              // SAME-NAMED physical column from a DROPPED predecessor
-              // (drop + re-add assigns a fresh id precisely so old data
-              // stays dead). Falling back to the target name would rebind
-              // to the dropped column and resurrect its values (round-20
-              // fuzz finding); map to a name guaranteed absent instead and
-              // let the source null-fill it.
-              if (fileSchema.fieldNames.contains(target.name))
-                s"__graft_absent_$id"
-              else target.name
-            })
-            case None => target.name
-          }
-        // delete sets newer than this group's files apply to it; the read
-        // schema widens to include their key columns (projected away after
-        // the filter so the output layout stays `read`)
-        val applicable = eqDeletes.filter(_.seq > seqKey)
-        val wideTarget: StructType =
-          if (applicable.isEmpty) read
-          else {
-            val missing = applicable.flatMap(_.names).distinct
-              .filterNot(read.fieldNames.contains)
-            StructType(read.fields ++ missing.map(n => clean.fields.find(_.name == n).get))
-          }
-        // double/float reads leave the vectorized OrcScan: orc-core's
-        // batch repetition detection compares with Java `==`, so a batch
-        // holding only mixed-sign zeros collapses to the first zero's sign
-        // for every consumer of the flag — Spark's OrcColumnVector
-        // included, with no interception seam. The row path reads through
-        // OrcIO's ZeroSignScrubReader, which restores the stored values.
-        // Scans that project no floating-point leaf (the flag only
-        // misfires on ±0.0) keep the vectorized reader.
-        val orcRow = orcRowBase || (fmt == FileFormats.Orc &&
-          wideTarget.fields.exists(f =>
-            !partServeNames.contains(f.name) &&
-              graft.format.Types.hasFloatLeaf(f.dataType)))
-        // physical row layout under deletes: [wideTarget..., rowIdx?,
-        // partition constants (only _file possible — identity partServe +
-        // deletes throws above)]; _file rides through the projection at
-        // the END, matching the declared output
-        val posExtra = if (needRowIdx) 1 else 0
-        val storedExtra = if (lineageStored) 2 else 0
-        // the delete filter's projection emits the INTERMEDIATE layout the
-        // lineage wrapper consumes: read columns, then rowIdx when a final
-        // column needs it (_pos or computed lineage), then stored lineage
-        // columns, then _file
-        val keepRowIdx = metaPos || lineageComputed
-        val deletes: Option[GroupDeletes] =
-          if (applicable.isEmpty && !groupPos) None
-          else Some(GroupDeletes(
-            applicable.map(ds => DeleteKeySource(
-              ds.names.map(wideTarget.fieldIndex).toArray, ds.names,
-              ds.fileNames,
-              ds.names.map(n => clean.fields.find(_.name == n).get.dataType),
-              ds.paths)),
-            wideTarget.fields.map(_.dataType) ++
-              (if (needRowIdx) Seq(LongType) else Nil) ++
-              (if (lineageStored) Seq(LongType, LongType) else Nil) ++
-              (if (metaFile) Seq(StringType) else Nil),
-            if (wideTarget.length == read.length && !groupPos && !metaLineage) None
-            else Some(read.fields.map(f => wideTarget.fieldIndex(f.name)).toSeq ++
-              (if (keepRowIdx) Seq(wideTarget.length) else Nil) ++
-              (if (lineageStored) Seq(wideTarget.length + posExtra,
-                wideTarget.length + posExtra + 1) else Nil) ++
-              (if (metaFile)
-                Seq(wideTarget.length + posExtra + storedExtra) else Nil)),
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()),
-            if (groupPos) Some(PosDeleteSource(posPaths, posDvs, wideTarget.length))
-            else None))
-        val renames: Map[String, String] =
-          wideTarget.fields.map(f => f.name -> fileName(f)).toMap
-        // nested levels resolve by id too: each read field's type is spelled
-        // with the FILE's nested names (target order/leaf types), so nested
-        // renames are metadata-only and nested adds read as nulls
-        val fileFieldById = fileSchema.fields.map(f => FieldIds.idOf(f) -> f).toMap
-        def fileSide(f: StructField): org.apache.spark.sql.types.DataType = {
-          val idTarget = FieldIds.findById(schema, FieldIds.nameToId(schema)(f.name))
-          (idTarget, idTarget.map(FieldIds.idOf).flatMap(fileFieldById.get)) match {
-            case (Some(tf), Some(ff)) => Types.fileSideType(
-              resolveIds(f.dataType, tf.dataType), ff.dataType)
-            case _ => f.dataType
-          }
-        }
-        // the row-index column is synthetic (populated by the reader, never
-        // read from the file), so it joins the read schema un-renamed, last;
-        // partition-served columns leave the DATA schema entirely (they are
-        // appended by Spark as partition constants, after the data columns)
-        val groupRead = StructType(wideTarget.fields
-          .filterNot(f => partServeNames.contains(f.name)).map(f =>
-            StructField(renames(f.name), fileSide(f), f.nullable)) ++
-          (if (needRowIdx && !orcRow && !avroIdx) Seq(StructField(
-            // nullable: the column is absent from the FILE (the reader treats
-            // it as a missing optional column, then its RowIndexGenerator
-            // overwrites the null vector with real row indexes). ORC pos
-            // groups append their counter inside GraftOrcRowScan instead.
-            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-              .ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
-          else Nil) ++
-          // compacted (materialized-lineage) files store the lineage
-          // columns physically — read them like ordinary data columns
-          (if (lineageStored) Seq(
-            StructField(Lineage.RowIdColumn, LongType, nullable = true),
-            StructField(Lineage.LastUpdatedColumn, LongType, nullable = true))
-          else Nil))
-        // file-side full schema: file names (all levels) with target types
-        // where ids align; groupRead's structs are subsets of these
-        val groupData = strip(StructType(fileSchema.fields.map { ff =>
-          val id = FieldIds.idOf(ff)
-          FieldIds.findById(schema, id) match {
-            case Some(tf) =>
-              ff.copy(dataType = Types.fileSideType(tf.dataType, ff.dataType))
-            case None => ff
-          }
-        } ++
-          (if (lineageStored) Seq(
-            StructField(Lineage.RowIdColumn, LongType, nullable = true),
-            StructField(Lineage.LastUpdatedColumn, LongType, nullable = true))
-          else Nil)))
-        // filters on partition-served columns can't reach parquet (the
-        // column isn't in the files) — they stay Spark-side residuals over
-        // the appended constants; partition PRUNING already fired in
-        // planFiles
-        val groupFilters =
-          if (groupGranular) Array.empty[Filter] // whole groups, no row filter
-          else pushed
-            .filter(_.references.forall(r => !partServeNames.contains(r)))
-            .flatMap(f => renameFilter(f, renames))
-        // manifest-fed index: no listing/stat calls at plan time. `_file`
-        // is a per-file constant, so the index degrades to one partition
-        // dir per file when it's requested (bin-packing trades for
-        // provenance — only on queries that ask)
-        val partValsOf: DataFile => Seq[Any] = df => {
-          val sp = m.specs(df.specId)
-          partServe.map(f => sp.fields.find(pf =>
-              pf.transform == Transforms.IdentityT &&
-              FieldIds.findById(schema, pf.sourceId).exists(_.name == f.name))
-            .map(pf => df.partition.getOrElse(pf.name, null)).getOrElse(null)) ++
-            (if (metaFile) Seq(df.path) else Nil)
-        }
-        val index = new GraftFileIndex(spark, tasks.map(_.file), partSchema,
-          partValsOf)
-        val scan: Scan = fmt match {
-          case FileFormats.Orc if orcRow =>
-            // partition-served identity columns ride as per-file constants
-            // (the vectorized branch gets them from GraftFileIndex): raw
-            // tuple values convert to Catalyst once per file here
-            val orcConsts: DataFile => Seq[Any] = df =>
-              partValsOf(df).take(partServe.size).zip(partServe).map {
-                case (v, f) => graft.format.Values.toCatalyst(v,
-                  Types.cleanType(f.dataType))
-              }
-            new GraftOrcRowScan(groupRead,
-              tasks.map(t =>
-                (t.file.path, t.file.fileSizeInBytes, orcConsts(t.file))),
-              new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf()),
-              partConsts = StructType(partServe.map(f => StructField(f.name,
-                Types.cleanType(f.dataType), nullable = true))),
-              appendFilePath = metaFile,
-              // stored-lineage columns sit at groupRead's tail; the scan's
-              // position counter must land BEFORE them to match the group
-              // layout [data..., rowIdx, stored...]
-              trailingStored = if (lineageStored) 2 else 0,
-              // hazard-only routing (mixed-sign-zero scrub) has no rowIdx
-              // slot in its declared layout
-              withRowIndex = needRowIdx,
-              maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
-              minPartitions = spark.sparkContext.defaultParallelism)
-          case FileFormats.Orc =>
-            // ORC search-argument pruning compares strings in Java/UTF-16
-            // order while Spark (and this library) compare in UTF-8 /
-            // codepoint order; the orders disagree on astral-vs-
-            // [U+E000,U+FFFF] pairs, so an ORDER predicate pushed into the
-            // ORC reader can skip row groups that contain matching rows —
-            // row loss the post-scan residual cannot undo (caught by the
-            // round-20 workload fuzzer). Equality/IN/null tests are exact
-            // under any total order the stats themselves use and stay
-            // pushed; string order comparisons stay Spark-side residuals.
-            org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
-              spark, spark.sessionState.newHadoopConf(), index,
-              dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = partSchema, options = options,
-              pushedAggregate = None,
-              pushedFilters = groupFilters.filter(orcSargSafe))
-          case FileFormats.Avro =>
-            new GraftAvroScan(groupRead, partSchema,
-              tasks.map(t => (t.file.path, t.file.fileSizeInBytes,
-                partValsOf(t.file).zip(partSchema.fields)
-                  .map { case (v, f) => graft.format.Values.toCatalyst(v, f.dataType) })),
-              new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf()),
-              spark.sessionState.conf.filesMaxPartitionBytes,
-              withRowIndex = avroIdx,
-              trailingStored = if (lineageStored) 2 else 0)
-          case _ =>
-            ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
-              dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = partSchema,
-              pushedFilters = groupFilters, options = options)
-        }
-        // initial-default backfill for columns this generation predates:
-        // (ordinal in the physical read row, clean type, catalyst value) —
-        // applied by a reader wrapper UNDER the delete filters
-        val fileIdSet = fileSchema.fields.map(FieldIds.idOf).toSet
-        val allFileIds = FieldIds.allIds(fileSchema)
-        val fills: Option[FillConfig] = {
-          val fs = wideTarget.fields.toSeq.zipWithIndex.flatMap { case (f, ord) =>
-            FieldIds.nameToId(schema).get(f.name)
-              .flatMap(FieldIds.findById(schema, _))
-              .filter(tf => !fileIdSet.contains(FieldIds.idOf(tf)))
-              .flatMap(tf => Defaults.of(tf).map { v =>
-                val ct = Types.cleanType(tf.dataType)
-                (ord, ct, Values.toCatalyst(v, ct))
-              })
-          }
-          // struct-nested defaults this generation predates: the COLUMN
-          // exists in the file, the defaulted descendant doesn't. Path
-          // indices are computed over the pruned-with-ids target type —
-          // the same field order the physical struct carries (fileSideType
-          // keeps target order)
-          val nested = wideTarget.fields.toSeq.zipWithIndex.flatMap {
-            case (f, ord) if f.dataType.isInstanceOf[StructType] =>
-              FieldIds.nameToId(schema).get(f.name)
-                .flatMap(FieldIds.findById(schema, _))
-                .filter(tf => fileIdSet.contains(FieldIds.idOf(tf))).toSeq
-                .flatMap { tf =>
-                  Defaults.nestedFills(resolveIds(f.dataType, tf.dataType),
-                    allFileIds).map { case (path, _, v) => (ord, path, v) }
-                }
-            case _ => Nil
-          }
-          if (fs.isEmpty && nested.isEmpty) None
-          else Some(FillConfig(
-            wideTarget.fields.map(_.dataType).toSeq ++
-              (if (needRowIdx) Seq(LongType) else Nil) ++
-              (if (lineageStored) Seq(LongType, LongType) else Nil) ++
-              (if (metaFile) Seq(StringType) else Nil),
-            fs, nested))
-        }
-        // lineage projection config: the wrapper reader turns the group's
-        // INTERMEDIATE layout [data..., rowIdx?, stored?, constants...]
-        // into the declared output [data..., _pos?, _row_id?, _luseq?,
-        // constants...] — computed groups take (base, seq) per partition
-        val lineageCfg: Option[LineageConfig] =
-          if (!metaLineage) None
-          else {
-            val dataTypes =
-              read.fields.filterNot(f => partServeNames.contains(f.name))
-                .map(f => Types.cleanType(f.dataType)).toSeq
-            val withDeletes = deletes.isDefined
-            // under deletes partServe is empty, so dataCount agrees either way
-            val tailTypes: Seq[DataType] =
-              if (withDeletes) (if (metaFile) Seq(StringType) else Nil)
-              else partSchema.fields.map(f => f.dataType).toSeq
-            Some(LineageConfig(
-              types = dataTypes ++
-                (if (keepRowIdx) Seq(LongType) else Nil) ++
-                (if (lineageStored) Seq(LongType, LongType) else Nil) ++
-                tailTypes,
-              dataCount = dataTypes.size,
-              hasRowIdx = keepRowIdx,
-              hasStored = lineageStored,
-              tailCount = tailTypes.size,
-              emitPos = metaPos, emitRowId = metaRowId, emitLuseq = metaLuseq,
-              kind = lineageKind))
-          }
-        (scan, deletes, fills, lineageCfg)
-    }
     // declared output = physical layout: data columns (minus partition-
     // served) then partition-served columns (incl. `_file`) — Spark
     // re-projects above by attribute, so order differences from the pruned
     // request are fine
-    val output =
+    val output: StructType =
       if (partSchema.isEmpty && !metaPos && !metaLineage) read
       else StructType(read.fields.filterNot(f => partServeNames.contains(f.name)) ++
         (if (metaPos) Seq(StructField(GraftSparkTable.PosColumn, LongType,
@@ -934,78 +666,395 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         (if (metaLuseq) Seq(StructField(Lineage.LastUpdatedColumn, LongType,
           nullable = true)) else Nil) ++
         partSchema.fields)
-    // storage-partitioned-join eligibility: opt-in via Spark's v2 bucketing
-    // conf, one scan group over one live spec whose fields are all identity
-    // or bucket[N], no row-level-op or metadata columns in play. Bucket
-    // fields report as connector bucket(N, col) transforms — Spark resolves
-    // them against this catalog's FunctionCatalog (GraftFunctions.bucket,
-    // the same murmur3 kernel the write path placed files with), so two
-    // tables bucketed the same way join with no shuffle, and with
-    // v2.bucketing.shuffle.enabled a derived side can be shuffled INTO the
-    // table's bucketing while the table side stays put. Live position
-    // deletes / DVs are compatible: the keyed partitions carry
-    // file-granular delete-scoped subs (KeyedPartition.subs), so a
-    // co-partitioned join over a MoR table still skips the shuffle. Each
-    // file's partition key converts to Catalyst values once, spec-field
-    // order (a bucket field's key is the stored bucket ordinal).
-    // multi-group scans (one reader group per format × schema generation)
-    // stay eligible: keyedParts tags each file with its group and the
-    // per-key task concatenates per-group subs
-    val spjInfo: Option[SpjInfo] =
-      if (groupGranular || metaFile || metaPos || metaLineage ||
-          plan.tasks.isEmpty) None
-      else if (!spark.sessionState.conf
-          .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
-          .toBoolean) None
-      else plan.tasks.map(_.file.specId).distinct match {
-        case Seq(specId) => m.specs.get(specId).flatMap { spec =>
-          val liveFields = spec.fields.filterNot(_.transform == Transforms.VoidT)
-          val supported = liveFields.forall(_.transform match {
-            case Transforms.IdentityT | Transforms.BucketT(_) |
-                 Transforms.TruncateT(_) | Transforms.YearT |
-                 Transforms.MonthT | Transforms.DayT | Transforms.HourT => true
-            case _ => false
+  }
+
+  /** Reader groups: one file-source scan per (writer-schema generation,
+    * sequence number while equality deletes are live, file format, lineage
+    * read strategy), in a deterministic order. Columns are re-mapped to
+    * each generation's *file* names by field id (id-based resolution, the
+    * heart of metadata-only rename — SURVEY §1.2), and every group keeps
+    * the TARGET column order so all generations produce identical
+    * InternalRow/ColumnarBatch layouts. The sequence key makes delete
+    * recency resolvable per group. */
+  private def groupTasks(l: ReadLayout)
+      : Seq[((Int, Long, String, Int), Seq[FileScanTask])] =
+    l.plan.tasks
+      .groupBy(t => (t.file.schemaId,
+        if (l.eqDeletes.isEmpty) 0L else t.sequenceNumber, t.file.fileFormat,
+        // lineage splits groups by read strategy: computed files take the
+        // row-index path with a per-file base, compacted (materialized)
+        // files read their stored columns, pre-v3 files read NULL
+        if (!l.metaLineage) 0
+        else Lineage.modeOf(t.file, t.sequenceNumber) match {
+          case _: Lineage.Computed => 1
+          case Lineage.Stored => 2
+          case Lineage.Absent => 0
+        }))
+      .toSeq.sortBy(_._1)
+
+  /** Per-group reader config. Parquet and ORC groups are Spark's own
+    * vectorized FileScans; Avro groups and hazard-routed ORC groups are the
+    * custom row scans. The group's PHYSICAL row is [data columns (the
+    * widened target minus partition-served columns), rowIdx?, stored
+    * lineage?, partition constants (partition-served columns, `_file`)];
+    * every ordinal below indexes that layout. */
+  private def groupReader(l: ReadLayout, key: (Int, Long, String, Int),
+      tasks: Seq[FileScanTask]): GroupReader = {
+    import l._
+    val (schemaId, seqKey, fmt, lineageKind) = key
+    val lineageComputed = metaLineage && lineageKind == 1
+    val lineageStored = metaLineage && lineageKind == 2
+    // parquet: every group rides the (cheap, vectorized) row-index
+    // column while deletes are live; ORC and Avro: only TARGETED
+    // groups pay the unsplit row-path counter fallback
+    val groupPos = posActive && (fmt match {
+      case FileFormats.Parquet => true
+      case _ => tasks.exists(t =>
+        posTargetPaths.contains(ParquetIO.canonPath(t.file.path)))
+    })
+    val orcPos = groupPos && fmt == FileFormats.Orc
+    // `_pos` rides the same row-index machinery position deletes use:
+    // parquet appends the synthetic reader column; ORC groups take the
+    // row-path counter scan; Avro groups go unsplit with a counter
+    val needRowIdx = groupPos || metaPos || lineageComputed
+    val orcRowBase = fmt == FileFormats.Orc && (orcPos || metaPos || lineageComputed)
+    val avroIdx = fmt == FileFormats.Avro && needRowIdx
+    val fileSchema = m.schemas.getOrElse(schemaId, schema)
+    val fileById = FieldIds.idToName(fileSchema)
+    def fileName(target: StructField): String =
+      FieldIds.findById(schema, FieldIds.nameToId(schema)(target.name))
+        .map(FieldIds.idOf) match {
+        case Some(id) => fileById.getOrElse(id, {
+          // the field id is ABSENT from this generation, so the column
+          // must read NULL — but the generation may still carry a
+          // SAME-NAMED physical column from a DROPPED predecessor
+          // (drop + re-add assigns a fresh id precisely so old data
+          // stays dead). Falling back to the target name would rebind
+          // to the dropped column and resurrect its values (round-20
+          // fuzz finding); map to a name guaranteed absent instead and
+          // let the source null-fill it.
+          if (fileSchema.fieldNames.contains(target.name))
+            s"__graft_absent_$id"
+          else target.name
+        })
+        case None => target.name
+      }
+    // delete sets newer than this group's files apply to it; the read
+    // schema widens to include their key columns (projected away after
+    // the filter so the output layout stays `read`); partition-served
+    // keys already ride the constants
+    val applicable = eqDeletes.filter(_.seq > seqKey)
+    val wideTarget: StructType =
+      if (applicable.isEmpty) read
+      else {
+        val missing = applicable.flatMap(_.names).distinct
+          .filterNot(n => read.fieldNames.contains(n) || partServeNames.contains(n))
+        StructType(read.fields ++ missing.map(n => clean.fields.find(_.name == n).get))
+      }
+    val dataFields = wideTarget.fields.toSeq.filterNot(f => partServeNames.contains(f.name))
+    // double/float reads leave the vectorized OrcScan: orc-core's
+    // batch repetition detection compares with Java `==`, so a batch
+    // holding only mixed-sign zeros collapses to the first zero's sign
+    // for every consumer of the flag — Spark's OrcColumnVector
+    // included, with no interception seam. The row path reads through
+    // OrcIO's ZeroSignScrubReader, which restores the stored values.
+    // Scans that project no floating-point leaf (the flag only
+    // misfires on ±0.0) keep the vectorized reader.
+    val orcRow = orcRowBase || (fmt == FileFormats.Orc &&
+      dataFields.exists(f => graft.format.Types.hasFloatLeaf(f.dataType)))
+    val posExtra = if (needRowIdx) 1 else 0
+    val storedExtra = if (lineageStored) 2 else 0
+    val tailAt = dataFields.length + posExtra + storedExtra
+    val physTypes: Seq[DataType] = dataFields.map(_.dataType) ++
+      (if (needRowIdx) Seq(LongType) else Nil) ++
+      (if (lineageStored) Seq(LongType, LongType) else Nil) ++
+      partSchema.fields.map(_.dataType)
+    def ordinal(name: String): Int = dataFields.indexWhere(_.name == name) match {
+      case -1 => tailAt + partSchema.fieldIndex(name)
+      case i => i
+    }
+    // the delete filter's projection emits the INTERMEDIATE layout the
+    // lineage wrapper consumes: read columns, then rowIdx when a final
+    // column needs it (_pos or computed lineage), then stored lineage
+    // columns, then the partition constants
+    val keepRowIdx = metaPos || lineageComputed
+    val keep: Seq[Int] =
+      read.fields.toSeq.filterNot(f => partServeNames.contains(f.name))
+        .map(f => ordinal(f.name)) ++
+        (if (keepRowIdx) Seq(dataFields.length) else Nil) ++
+        (if (lineageStored) Seq(dataFields.length + posExtra,
+          dataFields.length + posExtra + 1) else Nil) ++
+        partSchema.fields.indices.map(tailAt + _)
+    val deletes: Option[GroupDeletes] =
+      if (applicable.isEmpty && !groupPos) None
+      else Some(GroupDeletes(
+        applicable.map(ds => DeleteKeySource(
+          ds.names.map(ordinal).toArray, ds.names,
+          ds.fileNames,
+          ds.names.map(n => clean.fields.find(_.name == n).get.dataType),
+          ds.paths)),
+        physTypes,
+        if (keep == physTypes.indices) None else Some(keep),
+        new org.apache.spark.util.SerializableConfiguration(
+          spark.sessionState.newHadoopConf()),
+        if (groupPos) Some(PosDeleteSource(posPaths, posDvs, dataFields.length))
+        else None))
+    val renames: Map[String, String] =
+      wideTarget.fields.map(f => f.name -> fileName(f)).toMap
+    // nested levels resolve by id too: each read field's type is spelled
+    // with the FILE's nested names (target order/leaf types), so nested
+    // renames are metadata-only and nested adds read as nulls
+    val fileFieldById = fileSchema.fields.map(f => FieldIds.idOf(f) -> f).toMap
+    def fileSide(f: StructField): DataType = {
+      val idTarget = FieldIds.findById(schema, FieldIds.nameToId(schema)(f.name))
+      (idTarget, idTarget.map(FieldIds.idOf).flatMap(fileFieldById.get)) match {
+        case (Some(tf), Some(ff)) => Types.fileSideType(
+          resolveIds(f.dataType, tf.dataType), ff.dataType)
+        case _ => f.dataType
+      }
+    }
+    // the row-index column is synthetic (populated by the reader, never
+    // read from the file), so it joins the read schema un-renamed, last;
+    // partition-served columns leave the DATA schema entirely (they are
+    // appended by Spark as partition constants, after the data columns)
+    val groupRead = StructType(dataFields.map(f =>
+        StructField(renames(f.name), fileSide(f), f.nullable)) ++
+      (if (needRowIdx && !orcRow && !avroIdx) Seq(StructField(
+        // nullable: the column is absent from the FILE (the reader treats
+        // it as a missing optional column, then its RowIndexGenerator
+        // overwrites the null vector with real row indexes). ORC pos
+        // groups append their counter inside GraftOrcRowScan instead.
+        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+          .ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
+      else Nil) ++
+      // compacted (materialized-lineage) files store the lineage
+      // columns physically — read them like ordinary data columns
+      (if (lineageStored) Seq(
+        StructField(Lineage.RowIdColumn, LongType, nullable = true),
+        StructField(Lineage.LastUpdatedColumn, LongType, nullable = true))
+      else Nil))
+    // file-side full schema: file names (all levels) with target types
+    // where ids align; groupRead's structs are subsets of these
+    val groupData = strip(StructType(fileSchema.fields.map { ff =>
+      val id = FieldIds.idOf(ff)
+      FieldIds.findById(schema, id) match {
+        case Some(tf) =>
+          ff.copy(dataType = Types.fileSideType(tf.dataType, ff.dataType))
+        case None => ff
+      }
+    } ++
+      (if (lineageStored) Seq(
+        StructField(Lineage.RowIdColumn, LongType, nullable = true),
+        StructField(Lineage.LastUpdatedColumn, LongType, nullable = true))
+      else Nil)))
+    // filters on partition-served columns can't reach parquet (the
+    // column isn't in the files) — they stay Spark-side residuals over
+    // the appended constants; partition PRUNING already fired in
+    // planFiles
+    val groupFilters =
+      if (groupGranular) Array.empty[Filter] // whole groups, no row filter
+      else pushed
+        .filter(_.references.forall(r => !partServeNames.contains(r)))
+        .flatMap(f => renameFilter(f, renames))
+    // manifest-fed index: no listing/stat calls at plan time. `_file`
+    // is a per-file constant, so the index degrades to one partition
+    // dir per file when it's requested (bin-packing trades for
+    // provenance — only on queries that ask)
+    val partValsOf: DataFile => Seq[Any] = df => {
+      val sp = m.specs(df.specId)
+      partServe.map(f => sp.fields.find(pf =>
+          pf.transform == Transforms.IdentityT &&
+          FieldIds.findById(schema, pf.sourceId).exists(_.name == f.name))
+        .map(pf => df.partition.getOrElse(pf.name, null)).getOrElse(null)) ++
+        (if (metaFile) Seq(df.path) else Nil)
+    }
+    val index = new GraftFileIndex(spark, tasks.map(_.file), partSchema,
+      partValsOf)
+    val scan: Scan = fmt match {
+      case FileFormats.Orc if orcRow =>
+        // partition-served identity columns ride as per-file constants
+        // (the vectorized branch gets them from GraftFileIndex): raw
+        // tuple values convert to Catalyst once per file here
+        val orcConsts: DataFile => Seq[Any] = df =>
+          partValsOf(df).take(partServe.size).zip(partServe).map {
+            case (v, f) => graft.format.Values.toCatalyst(v,
+              Types.cleanType(f.dataType))
+          }
+        new GraftOrcRowScan(groupRead,
+          tasks.map(t =>
+            (t.file.path, t.file.fileSizeInBytes, orcConsts(t.file))),
+          new org.apache.spark.util.SerializableConfiguration(
+            spark.sessionState.newHadoopConf()),
+          partConsts = StructType(partServe.map(f => StructField(f.name,
+            Types.cleanType(f.dataType), nullable = true))),
+          appendFilePath = metaFile,
+          // stored-lineage columns sit at groupRead's tail; the scan's
+          // position counter must land BEFORE them to match the group
+          // layout [data..., rowIdx, stored...]
+          trailingStored = if (lineageStored) 2 else 0,
+          // hazard-only routing (mixed-sign-zero scrub) has no rowIdx
+          // slot in its declared layout
+          withRowIndex = needRowIdx,
+          maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
+          minPartitions = spark.sparkContext.defaultParallelism)
+      case FileFormats.Orc =>
+        // ORC search-argument pruning compares strings in Java/UTF-16
+        // order while Spark (and this library) compare in UTF-8 /
+        // codepoint order; the orders disagree on astral-vs-
+        // [U+E000,U+FFFF] pairs, so an ORDER predicate pushed into the
+        // ORC reader can skip row groups that contain matching rows —
+        // row loss the post-scan residual cannot undo (caught by the
+        // round-20 workload fuzzer). Equality/IN/null tests are exact
+        // under any total order the stats themselves use and stay
+        // pushed; string order comparisons stay Spark-side residuals.
+        org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
+          spark, spark.sessionState.newHadoopConf(), index,
+          dataSchema = groupData, readDataSchema = groupRead,
+          readPartitionSchema = partSchema, options = options,
+          pushedAggregate = None,
+          pushedFilters = groupFilters.filter(orcSargSafe))
+      case FileFormats.Avro =>
+        new GraftAvroScan(groupRead, partSchema,
+          tasks.map(t => (t.file.path, t.file.fileSizeInBytes,
+            partValsOf(t.file).zip(partSchema.fields)
+              .map { case (v, f) => graft.format.Values.toCatalyst(v, f.dataType) })),
+          new org.apache.spark.util.SerializableConfiguration(
+            spark.sessionState.newHadoopConf()),
+          spark.sessionState.conf.filesMaxPartitionBytes,
+          withRowIndex = avroIdx,
+          trailingStored = if (lineageStored) 2 else 0)
+      case _ =>
+        ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
+          dataSchema = groupData, readDataSchema = groupRead,
+          readPartitionSchema = partSchema,
+          pushedFilters = groupFilters, options = options)
+    }
+    // initial-default backfill for columns this generation predates:
+    // (ordinal in the physical read row, clean type, catalyst value) —
+    // applied by a reader wrapper UNDER the delete filters
+    val fileIdSet = fileSchema.fields.map(FieldIds.idOf).toSet
+    val allFileIds = FieldIds.allIds(fileSchema)
+    val fills: Option[FillConfig] = {
+      val fs = dataFields.zipWithIndex.flatMap { case (f, ord) =>
+        FieldIds.nameToId(schema).get(f.name)
+          .flatMap(FieldIds.findById(schema, _))
+          .filter(tf => !fileIdSet.contains(FieldIds.idOf(tf)))
+          .flatMap(tf => Defaults.of(tf).map { v =>
+            val ct = Types.cleanType(tf.dataType)
+            (ord, ct, Values.toCatalyst(v, ct))
           })
-          if (liveFields.isEmpty || !supported) None
+      }
+      // struct-nested defaults this generation predates: the COLUMN
+      // exists in the file, the defaulted descendant doesn't. Path
+      // indices are computed over the pruned-with-ids target type —
+      // the same field order the physical struct carries (fileSideType
+      // keeps target order)
+      val nested = dataFields.zipWithIndex.flatMap {
+        case (f, ord) if f.dataType.isInstanceOf[StructType] =>
+          FieldIds.nameToId(schema).get(f.name)
+            .flatMap(FieldIds.findById(schema, _))
+            .filter(tf => fileIdSet.contains(FieldIds.idOf(tf))).toSeq
+            .flatMap { tf =>
+              Defaults.nestedFills(resolveIds(f.dataType, tf.dataType),
+                allFileIds).map { case (path, _, v) => (ord, path, v) }
+            }
+        case _ => Nil
+      }
+      if (fs.isEmpty && nested.isEmpty) None
+      else Some(FillConfig(physTypes, fs, nested))
+    }
+    // lineage projection config: the wrapper reader turns the group's
+    // INTERMEDIATE layout [data..., rowIdx?, stored?, constants...]
+    // into the declared output [data..., _pos?, _row_id?, _luseq?,
+    // constants...] — computed groups take (base, seq) per partition
+    val lineageCfg: Option[LineageConfig] =
+      if (!metaLineage) None
+      else {
+        val dataTypes =
+          read.fields.filterNot(f => partServeNames.contains(f.name))
+            .map(f => Types.cleanType(f.dataType)).toSeq
+        val tailTypes: Seq[DataType] = partSchema.fields.map(_.dataType).toSeq
+        Some(LineageConfig(
+          types = dataTypes ++
+            (if (keepRowIdx) Seq(LongType) else Nil) ++
+            (if (lineageStored) Seq(LongType, LongType) else Nil) ++
+            tailTypes,
+          dataCount = dataTypes.size,
+          hasRowIdx = keepRowIdx,
+          hasStored = lineageStored,
+          tailCount = tailTypes.size,
+          emitPos = metaPos, emitRowId = metaRowId, emitLuseq = metaLuseq,
+          kind = lineageKind))
+      }
+    GroupReader(scan, deletes, fills, lineageCfg)
+  }
+
+  /** Storage-partitioned-join eligibility: opt-in via Spark's v2 bucketing
+    * conf, one live spec whose fields are all identity / bucket[N] /
+    * truncate / time transforms, no row-level-op or metadata columns in
+    * play. Bucket fields report as connector bucket(N, col) transforms —
+    * Spark resolves them against this catalog's FunctionCatalog
+    * (GraftFunctions.bucket, the same murmur3 kernel the write path placed
+    * files with), so two tables bucketed the same way join with no
+    * shuffle, and with v2.bucketing.shuffle.enabled a derived side can be
+    * shuffled INTO the table's bucketing while the table side stays put.
+    * Live position deletes / DVs are compatible: the keyed partitions carry
+    * file-granular delete-scoped subs (KeyedPartition.subs), so a
+    * co-partitioned join over a MoR table still skips the shuffle. Each
+    * file's partition key converts to Catalyst values once, spec-field
+    * order (a bucket field's key is the stored bucket ordinal). Multi-group
+    * scans (one reader group per format × schema generation) stay
+    * eligible: keyedParts tags each file with its group and the per-key
+    * task concatenates per-group subs. */
+  private def spjInfo(l: ReadLayout): Option[SpjInfo] = {
+    val plan = l.plan
+    if (groupGranular || l.metaFile || l.metaPos || l.metaLineage ||
+        plan.tasks.isEmpty) None
+    else if (!spark.sessionState.conf
+        .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
+        .toBoolean) None
+    else plan.tasks.map(_.file.specId).distinct match {
+      case Seq(specId) => l.m.specs.get(specId).flatMap { spec =>
+        val liveFields = spec.fields.filterNot(_.transform == Transforms.VoidT)
+        val supported = liveFields.forall(_.transform match {
+          case Transforms.IdentityT | Transforms.BucketT(_) |
+               Transforms.TruncateT(_) | Transforms.YearT |
+               Transforms.MonthT | Transforms.DayT | Transforms.HourT => true
+          case _ => false
+        })
+        if (liveFields.isEmpty || !supported) None
+        else {
+          val resolved = liveFields.map(pf =>
+            pf -> FieldIds.findById(l.schema, pf.sourceId))
+          if (resolved.exists(_._2.isEmpty)) None
           else {
-            val resolved = liveFields.map(pf =>
-              pf -> FieldIds.findById(schema, pf.sourceId))
-            if (resolved.exists(_._2.isEmpty)) None
-            else {
-              val fields = resolved.map { case (pf, f) =>
-                val keyType = pf.transform match {
-                  case Transforms.BucketT(_) | Transforms.YearT |
-                       Transforms.MonthT | Transforms.DayT |
-                       Transforms.HourT => IntegerType
-                  case _ => Types.cleanType(f.get.dataType)
-                }
-                SpjField(f.get.name, keyType, pf.transform)
+            val fields = resolved.map { case (pf, f) =>
+              val keyType = pf.transform match {
+                case Transforms.BucketT(_) | Transforms.YearT |
+                     Transforms.MonthT | Transforms.DayT |
+                     Transforms.HourT => IntegerType
+                case _ => Types.cleanType(f.get.dataType)
               }
-              try {
-                val keyOf = plan.tasks.map { t =>
-                  ParquetIO.canonPath(t.file.path) ->
-                    liveFields.zip(fields).map { case (pf, sf) =>
-                      Values.toCatalyst(t.file.partition.getOrElse(pf.name, null),
-                        sf.keyType)
-                    }
-                }.toMap
-                Some(SpjInfo(fields, keyOf))
-              } catch {
-                // an unconvertible partition value disables SPJ, never the scan
-                case scala.util.control.NonFatal(_) => None
-              }
+              SpjField(f.get.name, keyType, pf.transform)
+            }
+            try {
+              val keyOf = plan.tasks.map { t =>
+                ParquetIO.canonPath(t.file.path) ->
+                  liveFields.zip(fields).map { case (pf, sf) =>
+                    Values.toCatalyst(t.file.partition.getOrElse(pf.name, null),
+                      sf.keyType)
+                  }
+              }.toMap
+              Some(SpjInfo(fields, keyOf))
+            } catch {
+              // an unconvertible partition value disables SPJ, never the scan
+              case scala.util.control.NonFatal(_) => None
             }
           }
         }
-        case _ => None
       }
-    new GraftScan(output, groups.map(_._1), plan, spark, table, options,
-      groups.map(_._2), runtimeFileFiltering = groupGranular,
-      onRuntimeFilter = onRuntimeFilter, spjInfo = spjInfo,
-      ndvStats = scan.snapshot.map(_.snapshotId)
-        .flatMap(id => Stats.read(table, id)),
-      fills = groups.map(_._3),
-      lineages = groups.map(_._4))
+      case _ => None
+    }
   }
 
   /** Safe to hand to ORC's search-argument builder: no ORDER comparison on
@@ -1068,6 +1117,17 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         case other => return None
       })
     } else None
+}
+
+object GraftScanBuilder {
+  /** A library read: the plan to read as given and the scan schema its
+    * caller resolved alongside it. */
+  final case class ExplicitRead(plan: ScanPlan, schema: StructType)
+
+  /** One reader group's scan and its reader wrappers (delete filter,
+    * initial-default fills, lineage projection). */
+  private final case class GroupReader(scan: Scan, deletes: Option[GroupDeletes],
+      fills: Option[FillConfig], lineage: Option[LineageConfig])
 }
 
 /** Union-of-generations scan: concatenates each (generation, format)
@@ -1364,8 +1424,8 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
           // partition-scoped candidate sets that exceed the cap inside a
           // single task's partitions
           val rangeIdx =
-            if (eqBoundsActive &&
-                (global.length > EqBoundsCap || scoped.length > EqBoundsCap))
+            if (eqBoundsActive && (global.length > Deletes.EqBoundsLinearCap ||
+                scoped.length > Deletes.EqBoundsLinearCap))
               Some(EqRangeIndex.build(
                 ks.paths.flatMap(fileOf.get), table.metadata.schema))
             else None
@@ -1374,19 +1434,6 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
             global.filterNot(fileOf.contains), rangeIdx)
         }
     }.toMap
-  // PER-CANDIDATE key-range checks are linear sweeps — bounded so a
-  // pathological many-live-deletes scan can't regress planning to
-  // O(files×deletes); sets above the cap switch to [[EqRangeIndex]]
-  private lazy val EqBoundsCap: Int =
-    if (spark == null) 1024
-    else {
-      val raw = spark.conf.get("spark.graft.eq-bounds-linear-cap", "1024")
-      scala.util.Try(raw.trim.toInt).toOption.filter(_ > 0).getOrElse {
-        scanLog.warn(s"ignoring invalid spark.graft.eq-bounds-linear-cap" +
-          s"='$raw' (want a positive int); using 1024")
-        1024
-      }
-    }
   // aggregated narrowing observability: tasks scoped, candidate delete
   // files before/after narrowing — logged once per planning pass so a
   // scale operator can see whether narrowing is effective without a
@@ -1461,7 +1508,7 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
           // re-check is O(candidates × taskFiles); keep the superset, as
           // the pre-index code kept everything above the cap)
           def narrow(cands: Seq[String]): Seq[String] =
-            if (cands.length > EqBoundsCap) cands else cands.filter(boundsHit)
+            if (cands.length > Deletes.EqBoundsLinearCap) cands else cands.filter(boundsHit)
           val globalNarrowed =
             if (!eqBoundsActive) si.global
             else si.rangeIdx match {
@@ -1475,7 +1522,7 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
             }
           val scopedNarrowed =
             if (!eqBoundsActive) scopedCands
-            else if (scopedCands.length <= EqBoundsCap)
+            else if (scopedCands.length <= Deletes.EqBoundsLinearCap)
               scopedCands.filter(boundsHit)
             else si.rangeIdx match {
               // over-cap scoped candidates: intersect the tuple-scoped set

@@ -183,7 +183,6 @@ final class Actions(t: GraftTable) {
     // scan path's Deletes.eqDeleteCanHit semantics); the per-file bounds
     // refinement below is capped like the scan's linear sweep — above the
     // cap, partition scoping alone still bounds the shipped sets
-    val EqScopeBoundsCap = 1024
     val eqScopeCache = scala.collection.mutable.HashMap[
       (Int, Map[String, Any]), Seq[(DataFile, Long)]]()
     def eqEntriesFor(specId: Int, partition: Map[String, Any]) =
@@ -249,7 +248,7 @@ final class Actions(t: GraftTable) {
       // key-range overlap when the set count is sweepable
       val scopedEq0 = eqEntriesFor(tasks.head.file.specId, partition)
       val scopedEq =
-        if (scopedEq0.size > EqScopeBoundsCap) scopedEq0
+        if (scopedEq0.size > Deletes.EqBoundsLinearCap) scopedEq0
         else scopedEq0.filter { case (d, dseq) =>
           tasks.exists(ts => dseq > ts.sequenceNumber &&
             Deletes.eqBoundsCanHit(d, ts.file, schema))
@@ -454,7 +453,7 @@ final class Actions(t: GraftTable) {
     * difference between "every file might match" and "one file per key
     * range matches".
     *
-    * Reuses the library read path end-to-end (live deletes applied, old
+    * Reuses the table scan end-to-end (live deletes applied, old
     * schema generations mapped by field id, imported identity-partition
     * columns materialized), then ONE range shuffle sized to
     * `targetSizeBytes` outputs and the same fanout write + atomic-swap
@@ -485,7 +484,7 @@ final class Actions(t: GraftTable) {
     rewriteClustered(df => Seq(ZOrder.zValue(df, cols).asc), targetSizeBytes,
       filter)
 
-  /** Shared clustered-rewrite pipeline: library scan (live deletes applied,
+  /** Shared clustered-rewrite pipeline: table scan (live deletes applied,
     * old schema generations mapped by field id, imported identity-partition
     * columns materialized) → ONE range shuffle sized to `targetSizeBytes`
     * outputs → in-partition sort → the same fanout write + atomic-swap
@@ -501,8 +500,8 @@ final class Actions(t: GraftTable) {
     val plan = t.newScan().filter(filter).planFiles()
     if (plan.tasks.isEmpty) return RewriteResult(0, 0)
     // v3 row lineage: clustered rewrites preserve row identity the same
-    // way bin-pack compaction does — read the lineage columns through the
-    // library scan and MATERIALIZE them into the sorted outputs
+    // way bin-pack compaction does — read the lineage metadata columns
+    // through the scan and MATERIALIZE them into the sorted outputs
     val lineageOn = Lineage.enabled(m)
     val df = t.newScan().dfFor(plan, withLineage = lineageOn)
     // cluster by partition first so fanout writers see contiguous runs

@@ -84,8 +84,8 @@ object Changes {
       case None => chain0
     }
 
-    // one scan with NO pinned snapshot: every dfFor() read aligns to the
-    // current schema, giving the changelog a single uniform row type
+    // one scan with NO pinned snapshot: every explicit-plan read aligns to
+    // the current schema, giving the changelog a single uniform row type
     val scan = table.newScan()
     def read(tasks: Seq[FileScanTask], dels: Seq[(DataFile, Long)]): DataFrame =
       scan.dfFor(ScanPlan(tasks, dels, 0, 0, 0, tasks.size))
@@ -117,7 +117,7 @@ object Changes {
 
         if (addedTasks.nonEmpty)
           // same-commit equality deletes share the data files' sequence
-          // number, so dfFor's strict seq gate correctly skips them here;
+          // number, so the scan's strict `seq >` delete gate skips them here;
           // same-commit position deletes match by path and do apply
           parts += tag(read(addedTasks, newDeletes), Insert, ordinal, s.snapshotId)
         if (removedTasks.nonEmpty)

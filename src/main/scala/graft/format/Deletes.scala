@@ -461,6 +461,13 @@ object Deletes {
     }
   }
 
+  /** Most equality-delete files checked by a linear sweep of
+    * [[eqBoundsCanHit]] per scoping decision: bounded so a pathological
+    * many-live-deletes scan or compaction can't regress planning to
+    * O(files×deletes). Above it, the scan switches to [[EqRangeIndex]] and
+    * compaction keeps partition scoping alone. */
+  val EqBoundsLinearCap = 1024
+
   /** Key-RANGE check for an equality-delete file against a data file
     * (upstream Iceberg DeleteFileIndex#canContainEqDeletesForFile): the
     * delete's keys can only hit the file if, for EVERY key column, either

@@ -149,7 +149,7 @@ object FieldIds {
     DataType.fromJson(s).asInstanceOf[StructType]
 }
 
-/** Type-tree helpers shared by the library and DSv2 read paths. */
+/** Type-tree helpers shared by the read and write paths. */
 object Types {
 
   /** Strip graft metadata from every nesting level. */

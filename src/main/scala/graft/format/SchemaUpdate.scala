@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * (api/.../UpdateSchema.java:63-129: addColumn(parent, name, type), nested
   * rename/update/delete/move). Each commit adds a NEW schema id; existing
   * data files keep their schema-id and are re-mapped on read by field id at
-  * every struct level (TableScan.alignToSchema, connector fileSideType).
+  * every struct level (connector GraftScanBuilder, Types.fileSideType).
   */
 final case class SchemaUpdate(table: GraftTable) {
   private var ops: Seq[StructType => StructType] = Nil

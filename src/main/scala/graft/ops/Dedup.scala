@@ -77,10 +77,6 @@ object Dedup {
     * it fires, the round-robin shuffle moves the narrow projected input
     * once, and every consumer below is partitioning-invariant. */
   private def spreadNarrowInput(df: DataFrame): DataFrame = {
-    // session-scoped kill switch (default on) so deployments whose inputs
-    // are already well-split can skip the partition-count planning probe
-    if (df.sparkSession.conf
-        .get("spark.graft.dedup.spreadNarrowInput", "true") != "true") return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

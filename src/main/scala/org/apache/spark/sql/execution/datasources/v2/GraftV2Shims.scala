@@ -1,40 +1,38 @@
 package org.apache.spark.sql.execution.datasources.v2
 
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import graft.connector.GraftSparkTable
+import org.apache.spark.sql.catalyst.expressions.{Alias, CreateNamedStruct, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.connector.catalog.Table
 
-/** Build a DataFrame directly over an already-constructed DSv2 [[Scan]].
+/** Build a DataFrame over a DSv2 [[Table]] that has no catalog entry (the
+  * Dataset-from-LogicalPlan entry point is internal to Spark). The plan is
+  * an ordinary DataSourceV2Relation, so the optimizer pushes filters,
+  * required columns and aggregates into the table's scan builder exactly
+  * as it does for a catalog relation.
   *
-  * The library read path (GraftTable.newScan().toDF()) plans its own file
-  * groups and hands Spark fully-formed scans; for scans Spark has no public
-  * entry point for (e.g. graft's scrubbed columnar ORC scan), this shim
-  * plants a DataSourceV2ScanRelation leaf — the same logical node the
-  * catalog path produces after pushdown — so execution gets BatchScanExec
-  * with full columnar + whole-stage-codegen support, instead of an RDD of
-  * externally-converted rows. */
+  * Besides the table's own metadata columns the DataFrame serves
+  * `_metadata` (`file_path`, `row_index`), the file-source metadata struct,
+  * built from `_file` / `_pos`. All of them stay hidden until selected, and
+  * column pruning drops them — and the scan columns under them — when
+  * unused. */
 object GraftV2Shims {
+  private val FileMetadataStruct = "_metadata"
 
-  private final class ScanOnlyTable(scan: Scan, tableName: String)
-    extends Table with SupportsRead {
-    override def name(): String = tableName
-    override def schema(): org.apache.spark.sql.types.StructType =
-      scan.readSchema()
-    override def capabilities(): java.util.Set[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      () => scan
-  }
-
-  def scanToDF(spark: org.apache.spark.sql.SparkSession, scan: Scan,
-      name: String): DataFrame = {
-    val output = DataTypeUtils.toAttributes(scan.readSchema())
-    val relation = DataSourceV2Relation(
-      new ScanOnlyTable(scan, name), output, None, None,
-      CaseInsensitiveStringMap.empty())
-    Dataset.ofRows(spark.asInstanceOf[SparkSession],
-      DataSourceV2ScanRelation(relation, scan, output))
+  def tableToDF(spark: org.apache.spark.sql.SparkSession, table: Table): DataFrame = {
+    val rel = DataSourceV2Relation.create(table, None, None)
+    val withMeta = rel.withMetadataColumns()
+    val metaCols = withMeta.output.drop(rel.output.size)
+    val fileStruct = for {
+      file <- metaCols.find(_.name == GraftSparkTable.FileColumn)
+      pos <- metaCols.find(_.name == GraftSparkTable.PosColumn)
+      if !rel.output.exists(_.name == FileMetadataStruct)
+    } yield Alias(CreateNamedStruct(Seq(
+      Literal("file_path"), file, Literal("row_index"), pos)), FileMetadataStruct)()
+    val inner = Project(withMeta.output ++ fileStruct, withMeta)
+    val plan = Project(rel.output, inner)
+    plan.setTagValue(Project.hiddenOutputTag, inner.output.drop(rel.output.size))
+    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
   }
 }

@@ -242,10 +242,11 @@ class MultiFormatSpec extends SparkSpec {
     assert(t.toDF().select("data").as[String].collect().sorted.head === "data-0")
   }
 
-  test("avro library scan plants a pruned DSv2 batch scan") {
-    // the r21 read path: InternalRow direct through GraftAvroScan (no
-    // external-Row RDD), with the scan schema pruned to consumed columns
-    // so Avro's resolving decoder skips the rest without decoding
+  test("avro library scan reads through a pruned DSv2 batch scan") {
+    // library reads share the catalog's GraftScan: Avro groups decode
+    // InternalRow directly through GraftAvroScan (no external-Row RDD),
+    // with the read schema pruned to consumed columns so Avro's resolving
+    // decoder skips the rest without decoding
     val loc = freshLoc("avroplan")
     val t = GraftTable.create(spark, loc, sample(3).schema,
       properties = Map("write.format.default" -> "avro"))
@@ -254,8 +255,8 @@ class MultiFormatSpec extends SparkSpec {
     val scans = df.queryExecution.sparkPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(scans.size === 1, s"expected one planted scan:\n${df.queryExecution.sparkPlan}")
-    assert(scans.head.scan.isInstanceOf[graft.connector.GraftAvroScan])
+    assert(scans.size === 1, s"expected one batch scan:\n${df.queryExecution.sparkPlan}")
+    assert(scans.head.scan.isInstanceOf[graft.connector.GraftScan])
     assert(scans.head.scan.readSchema().fieldNames.toSeq === Seq("data"),
       "projection must prune the avro decode to the consumed column")
     assert(df.as[String].collect().sorted.toSeq === Seq("data-0", "data-1", "data-2"))

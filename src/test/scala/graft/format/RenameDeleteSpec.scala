@@ -430,20 +430,4 @@ class RenameDeleteSpec extends SparkSpec {
     assert(dsv2.toSeq === Seq(2L),
       s"DSv2 path must agree with the library path, kept: ${dsv2.toSeq}")
   }
-
-  test("requireColumns fails loudly on a delete file missing its columns") {
-    val dir = Files.createTempDirectory("graft-reqcols")
-    val p = s"$dir/other.parquet"
-    Seq((1L, "x")).toDF("a", "b").coalesce(1).write.mode("overwrite").parquet(p)
-    val part = new java.io.File(p).listFiles()
-      .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-    val conf = spark.sessionState.newHadoopConf()
-    val e = intercept[IllegalStateException] {
-      ParquetIO.requireColumns(part, Seq("file_path", "pos"), conf,
-        "position-delete")
-    }
-    assert(e.getMessage.contains("file_path"))
-    // present columns pass, case-insensitively
-    ParquetIO.requireColumns(part, Seq("A", "b"), conf, "test")
-  }
 }
